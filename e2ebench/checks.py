@@ -7,8 +7,9 @@
 - The ETL run is compared with a pandas evaluation of the generated CSVs:
   the quality report, the fact row count and the fact revenue fixed-point sum.
 
-Values are compared after the normalization the repo's oracle gate uses:
-columns sorted by name, rows sorted, doubles to 9 significant digits.
+Values are compared after the normalization of the repo's oracle gate
+(``tests/oracle_harness.py``): columns sorted by name, rows sorted, doubles
+to 9 significant digits.
 """
 
 from __future__ import annotations
@@ -16,37 +17,25 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 import math
-import os
-from decimal import Decimal
 
 import duckdb
 import pandas as pd
 
-from datagen import LAKE_TABLES
+from tests.oracle_harness import _norm_value as _scalar_norm
+from tests.oracle_harness import duck_connection
 
 
 def _norm_value(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, Decimal):
-        return ("decimal", str(v))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return 0.0 if v == 0 else float(f"{v:.9g}")
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat(timespec="microseconds")
-    if isinstance(v, dt.date):
-        return v.isoformat()
+    # registry results can hold arrays, which the harness's scalar
+    # normalization passes through unsorted and unrounded
     if isinstance(v, (list, tuple)):
         return tuple(_norm_value(x) for x in v)
-    return v
+    return _scalar_norm(v)
 
 
 def normalize(cols: list[str], rows: list[tuple]) -> tuple[list[str], list[tuple]]:
-    """Order-insensitive canonical form of a result set."""
+    """Order-insensitive canonical form of a result set: the oracle gate's
+    ``_norm_rows``, with arrays normalized element by element."""
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
     out = [tuple(_norm_value(r[i]) for i in idx) for r in rows]
     out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
@@ -58,11 +47,9 @@ def digest(cols: list[str], rows: list[tuple]) -> str:
 
 
 def duck_lake(lake_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """The oracle gate's DuckDB connection over ``lake_dir``."""
+    con = duck_connection(lake_dir)
     con.execute("SET threads TO 1")
-    for t in LAKE_TABLES:
-        path = os.path.join(lake_dir, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
 
 

@@ -1,9 +1,8 @@
-"""Seeded input generators for the end-to-end benchmark.
+"""Seeded input generator for the ``etl_batch`` workload.
 
-Two input families, both pure functions of the seed (same seed, same bytes):
-
-``write_sales_csvs`` — the ETL source pair, shaped like Kaggle's
-"100000 Sales Records" (FIXTURES.md §1): a local extract and a smaller API
+``write_sales_csvs`` is a pure function of the seed (same seed, same bytes).
+It writes the ETL source pair, shaped like Kaggle's "100000 Sales Records"
+(FIXTURES.md §1): a local extract and a smaller API
 extract that shares ``API_OVERLAP`` of its ``order_id``s with the local one.
 The FIXTURES.md §1 defect kinds are planted at the fixed rates in ``RATES``:
 
@@ -25,25 +24,14 @@ null ``order_id``     exactly one row per source
 Duplicates within a source are verbatim copies and the local source holds
 exactly one NULL-key row, so keep-first dedup has one right answer even
 though the engine breaks ties inside a source arbitrarily.
-
-``write_tables`` — the TPC-H-ish parquet lake the registry and the dashboard
-read (FIXTURES.md §4): region, nation, customer, supplier, part, orders,
-lineitem, documents and embeddings, with the same row counts per scale
-factor, value ranges and file layout (one row group, timezone-naive
-microsecond timestamps) as the engine's test data.
-
-Run ``python3 e2ebench/datagen.py --seed 7 --out /tmp/x`` to write both.
 """
 
 from __future__ import annotations
 
-import argparse
 import datetime as dt
 import os
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 #: rows in the local and API sales extracts
 N_LOCAL = 20_000
@@ -203,189 +191,3 @@ def write_sales_csvs(
     _write_csv(paths[0], _sales_rows(rng, local_ids, null_region_ok=False))
     _write_csv(paths[1], _sales_rows(rng, api_ids, null_region_ok=True))
     return paths
-
-
-# ---------------------------------------------------------------------------
-# TPC-H-ish lake
-# ---------------------------------------------------------------------------
-
-_REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
-_SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-_P_TYPES = ("ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD")
-_P_WORDS = ("large", "hot", "blue", "ring", "bolt", "nut", "green", "steel", "red", "tiny")
-_STATUSES = ("F", "O", "P")
-_O_PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-_VOCAB = (
-    "a agg batch big column customer data dup fast filter group hash join key line "
-    "merge order part query row scan slow small sort spark stream table the value "
-    "vector window"
-).split()
-_LANGS = ("en", "fr", "es", "zh", "de")
-#: first and last order date of the lake (o_orderdate is uniform between them)
-ORDER_DATE_LO = dt.date(1995, 1, 1)
-ORDER_DATE_HI = dt.date(2001, 8, 1)
-EMB_DIM = 64
-LAKE_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-    "documents", "embeddings",
-)
-
-
-def _ts(days: np.ndarray, base: dt.date) -> pa.Array:
-    us = (np.datetime64(base, "D") + days.astype("timedelta64[D]")).astype("datetime64[us]")
-    return pa.array(us, type=pa.timestamp("us"))
-
-
-def _cents(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return rng.integers(round(lo * 100), round(hi * 100) + 1, n) / 100.0
-
-
-def _rngs(seed: int) -> list[np.random.Generator]:
-    """One independent stream per table, so a table's content does not
-    depend on which other tables are generated."""
-    ss = np.random.SeedSequence([seed, 2])
-    return [np.random.Generator(np.random.PCG64(s)) for s in ss.spawn(8)]
-
-
-def _order_days(rng: np.random.Generator, n_ord: int) -> np.ndarray:
-    return rng.integers(0, (ORDER_DATE_HI - ORDER_DATE_LO).days + 1, n_ord)
-
-
-def _lake(seed: int, sf: float, names: tuple[str, ...]) -> dict[str, pa.Table]:
-    r = _rngs(seed)
-    n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
-    n_ord, n_li = int(1_500_000 * sf), int(6_000_000 * sf)
-    n_docs, n_emb = int(50_000 * sf), int(20_000 * sf)
-    t: dict[str, pa.Table] = {}
-    if "region" in names:
-        t["region"] = pa.table(
-            {"r_regionkey": pa.array(range(5), pa.int32()), "r_name": list(_REGIONS)}
-        )
-    if "nation" in names:
-        t["nation"] = pa.table(
-            {
-                "n_nationkey": pa.array(range(25), pa.int32()),
-                "n_name": [f"NATION_{i}" for i in range(25)],
-                "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-            }
-        )
-    if "customer" in names:
-        rc = r[0]
-        t["customer"] = pa.table(
-            {
-                "c_custkey": np.arange(n_cust, dtype=np.int64),
-                "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-                "c_nationkey": rc.integers(0, 25, n_cust).astype(np.int32),
-                "c_acctbal": _cents(rc, -999.99, 9999.99, n_cust),
-                "c_mktsegment": [_SEGMENTS[i] for i in rc.integers(0, 5, n_cust)],
-            }
-        )
-    if "supplier" in names:
-        rs = r[1]
-        t["supplier"] = pa.table(
-            {
-                "s_suppkey": np.arange(n_supp, dtype=np.int64),
-                "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-                "s_nationkey": rs.integers(0, 25, n_supp).astype(np.int32),
-                "s_acctbal": _cents(rs, -999.99, 9999.99, n_supp),
-            }
-        )
-    if "part" in names:
-        rp = r[2]
-        w = rp.integers(0, len(_P_WORDS), (n_part, 2))
-        t["part"] = pa.table(
-            {
-                "p_partkey": np.arange(n_part, dtype=np.int64),
-                "p_name": [f"{_P_WORDS[a]} {_P_WORDS[b]}" for a, b in w],
-                "p_brand": [f"Brand#{i}" for i in rp.integers(1, 26, n_part)],
-                "p_type": [_P_TYPES[i] for i in rp.integers(0, len(_P_TYPES), n_part)],
-                "p_size": rp.integers(1, 51, n_part).astype(np.int32),
-                "p_retailprice": (90_000 + np.arange(n_part) % 1_000 * 10) / 100.0,
-            }
-        )
-    if "orders" in names:
-        ro = r[3]
-        o_days = _order_days(ro, n_ord)
-        t["orders"] = pa.table(
-            {
-                "o_orderkey": np.arange(n_ord, dtype=np.int64),
-                "o_custkey": ro.integers(0, n_cust, n_ord).astype(np.int64),
-                "o_orderstatus": [_STATUSES[i] for i in ro.integers(0, 3, n_ord)],
-                "o_totalprice": _cents(ro, 1000.0, 500_000.0, n_ord),
-                "o_orderdate": _ts(o_days, ORDER_DATE_LO),
-                "o_orderpriority": [_O_PRIORITIES[i] for i in ro.integers(0, 5, n_ord)],
-            }
-        )
-    if "lineitem" in names:
-        o_days = _order_days(_rngs(seed)[3], n_ord)  # ship dates follow order dates
-        rl = r[4]
-        l_ord = rl.integers(0, n_ord, n_li)
-        t["lineitem"] = pa.table(
-            {
-                "l_orderkey": l_ord.astype(np.int64),
-                "l_partkey": rl.integers(0, n_part, n_li).astype(np.int64),
-                "l_suppkey": rl.integers(0, n_supp, n_li).astype(np.int64),
-                "l_linenumber": rl.integers(1, 8, n_li).astype(np.int32),
-                "l_quantity": rl.integers(1, 51, n_li).astype(np.float64),
-                "l_extendedprice": _cents(rl, 900.0, 105_000.0, n_li),
-                "l_discount": rl.integers(0, 11, n_li) / 100.0,
-                "l_tax": rl.integers(0, 9, n_li) / 100.0,
-                "l_returnflag": [("A", "N", "R")[i] for i in rl.integers(0, 3, n_li)],
-                "l_linestatus": [("F", "O")[i] for i in rl.integers(0, 2, n_li)],
-                "l_shipdate": _ts(o_days[l_ord] + rl.integers(1, 122, n_li), ORDER_DATE_LO),
-            }
-        )
-    if "documents" in names:
-        rd = r[5]
-        lens = rd.integers(10, 101, n_docs)
-        words = rd.integers(0, len(_VOCAB), int(lens.sum()))
-        texts, pos = [], 0
-        for n in lens:
-            texts.append(" ".join(_VOCAB[k] for k in words[pos : pos + n]))
-            pos += n
-        for i in np.flatnonzero(rd.random(n_docs) < 0.002):  # planted exact duplicates
-            texts[i] = texts[rd.integers(0, n_docs)]
-        lang_p = np.array([0.4, 0.15, 0.15, 0.15, 0.15])
-        t["documents"] = pa.table(
-            {
-                "doc_id": np.arange(n_docs, dtype=np.int64),
-                "text": texts,
-                "lang": [_LANGS[i] for i in rd.choice(5, n_docs, p=lang_p)],
-                "source": [f"src{i % 20}" for i in range(n_docs)],
-                "n_chars": np.array([len(s) for s in texts], dtype=np.int64),
-            }
-        )
-    if "embeddings" in names:
-        re_ = r[6]
-        x = re_.standard_normal((n_emb, EMB_DIM))
-        x = (x / np.linalg.norm(x, axis=1, keepdims=True)).astype(np.float32)
-        t["embeddings"] = pa.table(
-            {
-                "vec_id": np.arange(n_emb, dtype=np.int64),
-                "embedding": pa.array(list(x), type=pa.list_(pa.float32())),
-                "label": re_.integers(0, 10, n_emb).astype(np.int32),
-            }
-        )
-    return t
-
-
-def write_tables(seed: int, out_dir: str, sf: float, names: tuple[str, ...] = LAKE_TABLES) -> str:
-    """Write ``names`` as ``<out_dir>/<table>.parquet``; return ``out_dir``."""
-    os.makedirs(out_dir, exist_ok=True)
-    for name, tbl in _lake(seed, sf, names).items():
-        pq.write_table(tbl, os.path.join(out_dir, f"{name}.parquet"))
-    return out_dir
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--sf", type=float, default=0.1)
-    a = ap.parse_args()
-    write_sales_csvs(a.seed, os.path.join(a.out, "sales"))
-    write_tables(a.seed, os.path.join(a.out, "lake"), a.sf)
-
-
-if __name__ == "__main__":
-    main()

@@ -16,8 +16,9 @@ Run from the root of a checkout. The run
    object with ``correct``, ``attempted``, ``failed`` and ``metrics``.
 
 ``--trace 0`` reports the end-to-end metrics, ``--trace 1`` the per-layer
-ones. A traced run traces every other op, so it also reports the tracing
-overhead (traced minus untraced op time).
+ones. A traced run traces every other op, starting with the first, so its
+first pass is traced where an untraced run times it, and it also reports the
+tracing overhead (traced minus untraced op time).
 """
 
 from __future__ import annotations
@@ -32,12 +33,15 @@ import sys
 import time
 from dataclasses import dataclass, field
 
-import tracing
-from workloads import HEADLINE, HEAVY, WORKLOADS, OpStats
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-ENGINE = "bigdata_etl_elt_dashboard_spark"
+sys.path.insert(0, ROOT)  # the engine, and the oracle gate in tests/
+
+try:
+    import tracing
+    from workloads import HEADLINE, HEAVY, WORKLOADS, OpStats
+except ImportError as e:  # not inside a checkout of the repo
+    sys.exit(f"e2ebench: {e}; run from the root of a full checkout")
 
 #: (name, unit) of the end-to-end metrics a ``--trace 0`` run reports
 END_TO_END = (
@@ -54,6 +58,7 @@ PER_LAYER = (
     ("sources.catalog.load_s", "s"),
     ("setup.warmup_s", "s"),
     ("sources.readers.read_csv_s", "s"),
+    ("op.self_s", "s"),
     ("pipeline.run_pipeline_self_s", "s"),
     ("operators.transforms.transform_sales_s", "s"),
     ("operators.quality.run_data_quality_checks_s", "s"),
@@ -151,11 +156,11 @@ def trace_overhead(ops: list[OpRecord]) -> float:
     """Traced minus untraced op time. Each traced op is compared with the
     mean of the nearest untraced ops of the same key before and after it,
     which cancels a steady drift of op times across the run. The first op
-    is never a comparator: on ``etl_batch`` it is the application's cold
-    first run."""
+    takes no part: on ``etl_batch`` and ``dashboard_session`` it is the
+    application's cold first op."""
     diffs = []
     for i, o in enumerate(ops):
-        if not o.traced:
+        if not o.traced or i == 0:
             continue
         near = [
             next((p.dur for p in side if not p.traced and p.key == o.key), None)
@@ -177,16 +182,20 @@ def end_to_end_metrics(setup_s: float, ops: list[OpRecord]) -> dict[str, float]:
     }
 
 
-def per_layer_metrics(setup: dict[str, float], ops: list[OpRecord], tracer, peak_rss_mb: float) -> dict[str, float]:
-    """Times come from the traced ops; counts (Spark jobs, stages, tasks,
-    files, bytes) from every op of the traced run."""
-    traced = [i for i, o in enumerate(ops) if o.traced]
+def per_layer_metrics(
+    setup: dict[str, float], ops: list[OpRecord], tracer, peak_rss_mb: float, pass_len: int
+) -> dict[str, float]:
+    """Times come from the traced ops of the first pass, the ops an untraced
+    run times; counts (Spark jobs, stages, tasks, files, bytes) from every op
+    of the traced run."""
+    traced = [i for i, o in enumerate(ops[:pass_len]) if o.traced]
     m = {name: 0.0 for name, _ in PER_LAYER}
     m["session.get_spark_s"] = setup["get_spark_s"]
     m["sources.catalog.load_s"] = setup["catalog_load_s"]
     m["setup.warmup_s"] = setup["warmup_s"]
     for metric, span in _SPAN_TOTALS.items():
         m[metric] = _median(tracer.per_op_totals(span, traced))
+    m["op.self_s"] = _median(tracer.per_op_self("op", traced))
     m["pipeline.run_pipeline_self_s"] = _median(tracer.per_op_self("pipeline.run_pipeline", traced))
     for cls in ("headline", "heavy"):
         of_cls = [i for i in traced if ops[i].cls == cls]
@@ -270,9 +279,8 @@ def measure(wl, stream, seconds: float, trace: bool, tracer, counts=None) -> lis
     """The timed closed loop: one client, one op at a time, for ``seconds``
     (and on to the next multiple of ``wl.pass_len`` ops). Only ``wl.run`` is
     timed; the check and the cleanup of each op run outside it. When
-    ``trace`` is set, every other op is traced, starting with the second, and
-    at least three ops run, so each traced op has an untraced neighbour
-    after the first op;
+    ``trace`` is set, every other op is traced, starting with the first, and
+    at least four ops run, so op 2 is traced between two untraced ops;
     ``counts(i, starting)`` brackets op ``i`` to count its Spark work."""
     ops: list[OpRecord] = []
     start = time.perf_counter()
@@ -280,10 +288,10 @@ def measure(wl, stream, seconds: float, trace: bool, tracer, counts=None) -> lis
     while not (
         time.perf_counter() - start >= seconds
         and i % wl.pass_len == 0
-        and (not trace or i >= 3)
+        and (not trace or i >= 4)
     ):
         op = next(stream)
-        traced = trace and i % 2 == 1
+        traced = trace and i % 2 == 0
         wl.stats = OpStats()
         if counts is not None:
             counts(i, True)
@@ -318,7 +326,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> tuple[bool, li
     cpus = len(os.sched_getaffinity(0))
     work = os.path.join(ROOT, ".e2ebench")
     _prepare_environment(work, cpus)
-    sys.path.insert(0, ROOT)
     from bigdata_etl_elt_dashboard_spark.session import get_spark
 
     tracer = tracing.Tracer()
@@ -402,13 +409,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
 
-    if not os.path.isfile(os.path.join(ROOT, ENGINE, "__init__.py")):
-        print(f"e2ebench: no {ENGINE} package under {ROOT}; run from a full checkout", file=sys.stderr)
-        return 2
-
     warm_ok, ops, setup, extra = run(args.workload, args.seed, args.seconds, bool(args.trace))
     e2e = end_to_end_metrics(setup["setup_s"], ops)
-    layers = per_layer_metrics(setup, ops, extra["tracer"], extra["peak_rss_mb"]) if args.trace else {}
+    layers = (
+        per_layer_metrics(setup, ops, extra["tracer"], extra["peak_rss_mb"], WORKLOADS[args.workload].pass_len)
+        if args.trace
+        else {}
+    )
     correct = warm_ok and all(o.ok for o in ops)
     summary = {
         "workload": args.workload,

@@ -5,6 +5,7 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import hashlib
 import json
 import os
@@ -19,7 +20,7 @@ import checks
 import datagen
 import run
 import tracing
-from workloads import Op, QuerySession, Workload
+from workloads import DASHBOARD_LAKE, QUERY_LAKE, DashboardSession, Op, QuerySession, Workload
 
 BENCH = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROOT = os.path.dirname(BENCH)
@@ -46,16 +47,6 @@ def test_sales_generator_is_deterministic(tmp_path):
     c = datagen.write_sales_csvs(6, str(tmp_path / "c"), n_local=2_000, n_api=200)
     assert _tree_digest(os.path.dirname(a[0])) == _tree_digest(os.path.dirname(b[0]))
     assert _tree_digest(os.path.dirname(a[0])) != _tree_digest(os.path.dirname(c[0]))
-
-
-def test_lake_generator_is_deterministic(tmp_path):
-    datagen.write_tables(5, str(tmp_path / "a"), 0.001)
-    datagen.write_tables(5, str(tmp_path / "b"), 0.001)
-    datagen.write_tables(6, str(tmp_path / "c"), 0.001, ("orders",))
-    a = _tree_digest(str(tmp_path / "a"))
-    assert a == _tree_digest(str(tmp_path / "b"))
-    assert set(a) == {f"{t}.parquet" for t in datagen.LAKE_TABLES}
-    assert a["orders.parquet"] != _tree_digest(str(tmp_path / "c"))["orders.parquet"]
 
 
 def test_sales_generator_plants_every_defect_kind(tmp_path):
@@ -103,7 +94,7 @@ def test_every_benchmark_metric_is_emitted_with_its_unit():
     ops = _fake_ops()
     e2e = json.loads(run.result_line(True, ops, run.end_to_end_metrics(3.0, ops), dict(run.END_TO_END)))
     setup = {"get_spark_s": 1.0, "catalog_load_s": 0.5, "warmup_s": 1.5}
-    layers = run.per_layer_metrics(setup, ops, tracing.Tracer(), 800.0)
+    layers = run.per_layer_metrics(setup, ops, tracing.Tracer(), 800.0, 24)
     per = json.loads(run.result_line(True, ops, layers, dict(run.PER_LAYER)))
     for out, metrics in ((e2e, spec["end_to_end"]), (per, spec["per_layer"])):
         assert set(out) == {"correct", "attempted", "failed", "metrics"}
@@ -126,19 +117,13 @@ def test_percentiles_land_in_their_class():
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def lake(tmp_path_factory):
-    return datagen.write_tables(3, str(tmp_path_factory.mktemp("lake")), 0.001)
-
-
-def test_wrong_query_row_fails_its_op(lake, tmp_path):
+def test_wrong_query_row_fails_its_op(tmp_path):
     from bigdata_etl_elt_dashboard_spark.plans import REGISTRY
 
     wl = QuerySession(str(tmp_path), 3, tracing.Tracer())
-    wl.lake = lake
     wl.prepare_checks()
     op = Op("q2_revenue_per_year", "headline")
-    cols, rows = checks.duck_rows(checks.duck_lake(lake), REGISTRY[op.key].oracle)
+    cols, rows = checks.duck_rows(checks.duck_lake(QUERY_LAKE), REGISTRY[op.key].oracle)
     assert wl.check(op, (cols, rows))
     bad = list(rows)
     bad[0] = (bad[0][0], bad[0][1] * 1.001)
@@ -156,10 +141,8 @@ def test_rows_only_query_is_checked_against_its_warmup_digest(tmp_path):
     assert not wl.check(op, (["query_id", "neighbor_id", "score"], [(0, 1, 0.9), (0, 3, 0.8)]))
 
 
-def test_wrong_dashboard_row_fails_its_op(lake):
-    import datetime as dt
-
-    con = checks.duck_lake(lake)
+def test_wrong_dashboard_row_fails_its_op():
+    con = checks.duck_lake(QUERY_LAKE)
     exp = checks.dashboard_expected(con, dt.date(1996, 1, 1), dt.date(1998, 12, 31), ["2-HIGH", "5-LOW"], 30)
     (n, total), = exp["kpis"]
     got = {k: list(v) for k, v in exp.items()}
@@ -230,7 +213,7 @@ def test_spans_nest_and_top_level_spans_cover_each_op(tmp_path):
     ops = run.measure(wl, wl.ops(), 0.05, True, tracer)
     assert len(ops) >= 3 and len(ops) % wl.pass_len == 0
     assert all(o.ok for o in ops)
-    assert [o.traced for o in ops[:4]] == [False, True, False, True]
+    assert len(ops) >= 4 and [o.traced for o in ops[:4]] == [True, False, True, False]
     tops = [s for s in tracer.spans if s.parent is None]
     assert [s.op for s in tops] == [i for i, o in enumerate(ops) if o.traced]
     for s in tops:
@@ -247,11 +230,28 @@ def test_spans_nest_and_top_level_spans_cover_each_op(tmp_path):
 
 
 def test_trace_overhead_cancels_drift_and_skips_the_cold_first_op():
-    # ops slow down by 0.1 s each; traced ops cost 0.05 s more; op 0 is cold
-    ops = [run.OpRecord("op", "op", 1.0 + 0.1 * i + 0.05 * (i % 2), True, i % 2 == 1) for i in range(8)]
+    # ops slow down by 0.1 s each; traced (even) ops cost 0.05 s more; op 0 is cold
+    ops = [run.OpRecord("op", "op", 1.0 + 0.1 * i + 0.05 * (i % 2 == 0), True, i % 2 == 0) for i in range(8)]
     ops[0].dur = 30.0
+    assert run.trace_overhead(ops[:4]) == pytest.approx(0.05)  # op 2 between ops 1 and 3
     assert run.trace_overhead(ops[:7]) == pytest.approx(0.05)
-    assert run.trace_overhead(ops[:4]) == pytest.approx(0.05)  # one-sided pairs: -0.05, +0.15
+
+
+def test_layer_times_come_from_the_first_pass():
+    # etl_batch: an untraced run times op 0 only, the application's cold run
+    tracer, ops, t = tracing.Tracer(), [], 0.0
+    for i, dur in enumerate((30.0, 12.0, 10.0, 9.0)):
+        traced = i % 2 == 0
+        if traced:
+            sid = len(tracer.spans)
+            tracer.spans.append(tracing.Span("op", t, t + dur, None, i))
+            tracer.spans.append(tracing.Span("operators.transforms.transform_sales", t, t + dur / 3, sid, i))
+        ops.append(run.OpRecord("run", "run", dur, True, traced))
+        t += dur
+    setup = {"get_spark_s": 1.0, "catalog_load_s": 0.0, "warmup_s": 0.0}
+    m = run.per_layer_metrics(setup, ops, tracer, 800.0, 1)
+    assert m["operators.transforms.transform_sales_s"] == pytest.approx(10.0)
+    assert m["op.self_s"] == pytest.approx(20.0)
 
 
 def test_untraced_ops_record_no_spans(tmp_path):
@@ -259,6 +259,34 @@ def test_untraced_ops_record_no_spans(tmp_path):
     wl = _SleepWorkload(str(tmp_path), 0, tracer)
     ops = run.measure(wl, wl.ops(), 0.02, False, tracer)
     assert ops and not tracer.spans and not any(o.traced for o in ops)
+
+
+def test_benchmark_lakes_are_the_repos_testdata():
+    from bigdata_etl_elt_dashboard_spark.sources.catalog import DEFAULT_SF_DIR
+
+    pairs = [(os.path.join(DASHBOARD_LAKE, "orders.parquet"), os.path.join(DEFAULT_SF_DIR, "orders.parquet"))]
+    sf001 = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+    pairs += [(os.path.join(QUERY_LAKE, n), os.path.join(sf001, n)) for n in sorted(os.listdir(QUERY_LAKE))]
+    if not all(os.path.exists(b) for _, b in pairs):
+        pytest.skip("the repo's testdata is not on this host")
+    for ours, theirs in pairs:
+        with open(ours, "rb") as a, open(theirs, "rb") as b:
+            assert a.read() == b.read(), ours
+
+
+def test_dashboard_filters_follow_the_seed(tmp_path):
+    def filters(seed):
+        wl = DashboardSession(str(tmp_path), seed, tracing.Tracer())
+        wl.prepare_checks()
+        stream = wl.ops()
+        out = [next(stream).arg for _ in range(4)]
+        wl.close()
+        return out
+
+    a = filters(1)
+    assert a == filters(1) and a != filters(2)
+    lo, hi = dt.date(1995, 1, 1), dt.date(2001, 8, 1)
+    assert all(lo <= start <= hi and start <= end and prios for start, end, prios in a)
 
 
 # ---------------------------------------------------------------------------
