@@ -26,8 +26,8 @@ from tests.oracle_harness import duck_connection
 
 
 def _norm_value(v):
-    # registry results can hold arrays, which the harness's scalar
-    # normalization passes through unsorted and unrounded
+    # registry results can hold arrays, whose doubles the harness's scalar
+    # normalization would pass through unrounded
     if isinstance(v, (list, tuple)):
         return tuple(_norm_value(x) for x in v)
     return _scalar_norm(v)
